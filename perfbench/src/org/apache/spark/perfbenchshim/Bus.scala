@@ -1,0 +1,10 @@
+package org.apache.spark.perfbenchshim
+
+import org.apache.spark.SparkContext
+
+/** Listener events arrive asynchronously; totals are read only after the
+  * bus has delivered everything posted so far.
+  */
+object Bus {
+  def drain(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+}
